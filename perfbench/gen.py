@@ -23,7 +23,8 @@ TYPES = ["ECONOMY", "LARGE", "MEDIUM", "PROMO", "SMALL", "STANDARD"]
 ADJ = ["small", "red", "blue", "hot", "cold", "big", "green", "shiny"]
 NOUN = ["ring", "widget", "bolt", "gear", "gizmo", "nut", "spring", "valve"]
 EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
-LANGS = ["en", "en", "en", "de", "es", "fr", "zh"]
+LANGS = ["en", "de", "es", "fr", "zh"]
+LANG_P = [0.4, 0.15, 0.15, 0.15, 0.15]
 US_PER_DAY = 86_400_000_000
 
 # The ingest workload's generator parameters (recorded in SPEC.json).
@@ -56,7 +57,6 @@ def star_schema(rng, out, sf):
     n_cust, n_supp = int(150_000 * sf), max(100, int(10_000 * sf))
     n_part, n_ord = int(200_000 * sf), int(1_500_000 * sf)
     n_line, n_ev = int(6_000_000 * sf), int(1_000_000 * sf)
-    n_doc, n_emb = int(50_000 * sf), max(500, int(20_000 * sf))
 
     _write(out, "region", {
         "r_regionkey": pa.array(range(5), pa.int32()),
@@ -114,23 +114,32 @@ def star_schema(rng, out, sf):
         "event_type": np.array(EVENT_TYPES)[rng.integers(0, 5, n_ev)],
         "value": _money(rng, n_ev, 0.01, 490.0),
         "props": [f'{{"k": {k}}}' for k in rng.integers(0, 100, n_ev)]})
-    texts = []
-    for i in range(n_doc):
-        # about 5% near duplicates: an earlier document plus " dup"
-        if i > 10 and rng.random() < 0.05:
-            texts.append(texts[int(rng.integers(0, i))] + " dup")
-        else:
-            n = int(rng.integers(10, 100))
-            texts.append(" ".join(np.array(WORDS)[rng.integers(0, len(WORDS), n)]))
+
+
+def corpus(rng, out, sf):
+    """The curation corpus: `documents` and `embeddings`."""
+    n_doc, n_emb = int(50_000 * sf), max(500, int(20_000 * sf))
+    # documents and embeddings follow the shape of the engine's sf0.1
+    # test data (SPEC.json "inputs.fit" has the measured figures): words
+    # drawn uniformly from one 30-word vocabulary, 10 to 99 words per
+    # document, and exactly 5% of the documents overwritten, in turn,
+    # by another document plus " dup" (so a few are dups of dups)
+    words = np.array(WORDS)
+    texts = [" ".join(words[rng.integers(0, len(WORDS), int(rng.integers(10, 100)))])
+             for _ in range(n_doc)]
+    for i in rng.choice(n_doc, n_doc // 20, replace=False):
+        j = int(rng.integers(0, n_doc - 1))
+        texts[i] = texts[j + (j >= i)] + " dup"
     _write(out, "documents", {
         "doc_id": np.arange(n_doc, dtype=np.int64),
         "text": texts,
-        "lang": np.array(LANGS)[rng.integers(0, len(LANGS), n_doc)],
+        "lang": rng.choice(LANGS, n_doc, p=LANG_P),
         "source": [f"src{i % 20}" for i in range(n_doc)],
         "n_chars": np.array([len(t) for t in texts], dtype=np.int64)})
+    # 64-d unit vectors with no cluster structure, and labels drawn
+    # independently of them, as in the test data
     labels = rng.integers(0, 10, n_emb)
-    centers = rng.normal(0, 1, (10, 64))
-    vecs = centers[labels] * 0.5 + rng.normal(0, 1, (n_emb, 64))
+    vecs = rng.normal(0, 1, (n_emb, 64))
     vecs /= np.linalg.norm(vecs, axis=1, keepdims=True)
     _write(out, "embeddings", {
         "vec_id": np.arange(n_emb, dtype=np.int64),
@@ -182,10 +191,12 @@ def ingest_inputs(rng, out):
     }
 
 
-def generate(out, seed, sf):
+def generate(out, seed, sf, corpus_sf):
+    """Star schema at `sf`, documents and embeddings at `corpus_sf`."""
     os.makedirs(out, exist_ok=True)
     rng = np.random.default_rng(seed)
     star_schema(rng, out, sf)
+    corpus(rng, out, corpus_sf)
     plan = ingest_inputs(rng, out)
     with open(os.path.join(out, "ingest_plan.json"), "w") as f:
         json.dump(plan, f)
